@@ -194,23 +194,25 @@ final class RecordEncoder(
   private val bytes = new Array[Byte](recordLength)
   private val buffer = ByteBuffer.wrap(bytes).order(section.order)
 
-  // (input ordinal or -1, type tag, byte offset) per file field
-  private val plan: Array[(Int, Int, Int)] =
-    fileSchema.fields.zipWithIndex.map { case (f, i) =>
-      val in = inputSchema.fields.indexWhere(g => g.name == f.name && g.dataType == f.dataType)
-      (in, FieldDecoder.Tag.of(f.dataType), section.fieldOffsets(i))
-    }
+  // per file field: input ordinal (or -1), type tag, byte offset — three
+  // primitive arrays, so the per-row loop reads them without boxing
+  private val inputOrds: Array[Int] = fileSchema.fields.map { f =>
+    inputSchema.fields.indexWhere(g => g.name == f.name && g.dataType == f.dataType)
+  }
+  private val tags: Array[Int] = fileSchema.fields.map(f => FieldDecoder.Tag.of(f.dataType))
+  private val offsets: Array[Int] = section.fieldOffsets
 
   /** Encode `row` (shaped as `inputSchema`); returns an internally reused
     * byte array of exactly `recordLength` bytes. */
   def encode(row: InternalRow): Array[Byte] = {
+    import FieldDecoder.Tag
     var i = 0
-    while (i < plan.length) {
-      val (in, tag, off) = plan(i)
-      import FieldDecoder.Tag
+    while (i < tags.length) {
+      val in = inputOrds(i)
+      val off = offsets(i)
       if (in < 0 || row.isNullAt(in)) {
         // zero-fill: absent or null field
-        tag match {
+        tags(i) match {
           case Tag.Byte   => buffer.put(off, 0: Byte)
           case Tag.Short  => buffer.putShort(off, 0: Short)
           case Tag.Int    => buffer.putInt(off, 0)
@@ -218,7 +220,7 @@ final class RecordEncoder(
           case Tag.Float  => buffer.putFloat(off, 0f)
           case Tag.Double => buffer.putDouble(off, 0d)
         }
-      } else tag match {
+      } else tags(i) match {
         case Tag.Byte   => buffer.put(off, row.getByte(in))
         case Tag.Short  => buffer.putShort(off, row.getShort(in))
         case Tag.Int    => buffer.putInt(off, row.getInt(in))

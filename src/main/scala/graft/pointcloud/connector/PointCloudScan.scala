@@ -61,21 +61,21 @@ class PointCloudScanBuilder(
     *    (numeric comparisons in the exposed-schema domain, null-aware)
     *    are claimed as pushed and dropped from Spark's residual — a
     *    selective range scan never materializes non-matching rows.
+    *    Raw readers evaluate them on the record bytes in the file, LAZ
+    *    and COPC readers on each decoded chunk's records, before column
+    *    fill. With no residual Filter, the plan's generated code carries
+    *    no query literals, so a repeated query shape with new bounds
+    *    reuses Spark's compiled classes.
     * XYZ text reads keep everything residual (values only exist after
     * per-line parsing, where Spark's own codegen filter is as good).
     */
   override def pushFilters(filters: Array[SourceFilter]): Array[SourceFilter] = {
     skipFilters = bboxFilters ++ filters
-    // LAZ sections decode whole chunks anyway (a record predicate saves
-    // no entropy-decode work), and the record readers evaluate pushed
-    // filters on RAW record bytes — keep everything residual when any
-    // section is compressed; header-bbox file skip still applies.
     // option-derived filters (bbox / timerange) are NOT residual-
     // droppable (Spark never saw them) so they stay in the
     // reader-applied set unconditionally.
     val (push, residual) =
-      if (kind == FormatKind.Xyz || resolved.sections.exists(_.laz.isDefined))
-        (Array.empty[SourceFilter], filters)
+      if (kind == FormatKind.Xyz) (Array.empty[SourceFilter], filters)
       else filters.partition(RecordPredicate.pushable(_, tableSchema))
     recordFilters = bboxFilters ++ push
     residual
@@ -295,10 +295,9 @@ class PointCloudScan(
     provider: PointCloudProvider = null,
     pushedFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
     limit: Int = -1,
-    /** ALL pushed-down conjuncts, claimed or residual — LAZ sections
-      * keep record filters residual (Spark re-evaluates them exactly),
-      * but the PLANNER may still use every conjunct conservatively for
-      * COPC chunk skipping, exactly like the header file skip does. */
+    /** ALL pushed-down conjuncts, claimed or residual — the PLANNER may
+      * use every conjunct conservatively for COPC chunk skipping, exactly
+      * like the header file skip does. */
     planFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering {
 
@@ -856,10 +855,10 @@ class PointCloudReaderFactory(
       p.fid)
 
   /** Same, over a LAZ partition's DECODED records (a decoded chunk is a
-    * run of ordinary fixed-stride LAS records). The batch builder keeps
-    * filters residual for compressed tables, but the STREAMING path may
-    * claim filters as pushed before any .laz file lands — the readers
-    * must honor them or claimed-pushed rows leak unfiltered. */
+    * run of ordinary fixed-stride LAS records). Both the batch builder
+    * and the streaming source claim pushable filters for compressed
+    * sections — the readers must honor them or claimed-pushed rows leak
+    * unfiltered. */
   private def lazPredicate(p: LazPartition): RecordPredicate =
     if (pushedFilters.isEmpty) null
     else new RecordPredicate(pushedFilters,

@@ -72,10 +72,10 @@ class PointCloudMicroBatchStream(
     checkpointLocation: String,
     pushedFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
     /** ALL pushed conjuncts (claimed + residual) — planning-only, like
-      * the batch scan's planFilters: LAZ keeps record filters residual
-      * (pushedFilters is EMPTY there), but COPC chunk skipping may use
-      * every conjunct conservatively since Spark re-evaluates residuals
-      * exactly on whatever still decodes. */
+      * the batch scan's planFilters: COPC chunk skipping may use every
+      * conjunct conservatively, since the reader-side predicate (claimed)
+      * or Spark (residual) evaluates each one exactly on whatever still
+      * decodes. */
     planFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends MicroBatchStream with SupportsTriggerAvailableNow with Logging {
 

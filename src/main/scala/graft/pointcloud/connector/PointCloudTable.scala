@@ -23,6 +23,26 @@ object PointCloudProvider {
   final val HeaderReadParallelism = 16
   /** Per-path header memo bound (entries, not bytes; headers are tiny). */
   final val HeaderCacheMaxEntries = 100000
+
+  /** One driver-wide pool for resolve's header reads, shared by every
+    * provider instance: Spark builds a new provider for every `read`, so
+    * a pool owned by the resolve would start (and stop) a thread per
+    * file on every query. Fixed-size, with daemon threads that all start
+    * on first use and never time out, so later resolves start none. */
+  private[graft] lazy val headerPool: java.util.concurrent.ExecutorService = {
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val pool = new java.util.concurrent.ThreadPoolExecutor(
+      HeaderReadParallelism, HeaderReadParallelism,
+      0L, java.util.concurrent.TimeUnit.MILLISECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-header-read-${started.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.prestartAllCoreThreads()
+    pool
+  }
 }
 
 /** Which point-cloud format a table speaks. `extension` names the
@@ -96,37 +116,35 @@ abstract class PointCloudProvider extends TableProvider
     val files = PointCloudUtil.expandPaths(PointCloudUtil.explicitPaths(options), kind, conf)
     // Header reads are tiny metadata IO, but a 100 TB dataset is ~1e5
     // files and a serial driver loop is 1e5 sequential storage round
-    // trips (SURVEY O9). Parse headers on a bounded pool — path order
-    // (and so fid numbering) is preserved by indexing the futures — and
-    // memoize per (path, element), so an incremental re-resolve (new
+    // trips (SURVEY O9). Parse headers on the shared bounded pool — path
+    // order (and so fid numbering) is preserved by indexing the futures —
+    // and memoize per (path, element), so an incremental re-resolve (new
     // files arriving in a watched directory) only reads the new headers.
     val element = options.getOrDefault("element", "vertex")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(PointCloudProvider.HeaderReadParallelism, files.size)))
+    def sectionsOf(p: String): Seq[FileSection] = {
+      val ck = p + "\u0001" + element
+      val hit = headerCache.get(ck)
+      if (hit != null) hit
+      else {
+        try {
+          val r = readSections(p, options, conf)
+          if (headerCache.size() < PointCloudProvider.HeaderCacheMaxEntries)
+            headerCache.put(ck, r)
+          r
+        } catch {
+          case e: Exception =>
+            logWarning(s"Skipping unreadable ${kind.name} file $p: ${e.getMessage}")
+            Nil
+        }
+      }
+    }
     val perFile: Seq[Seq[FileSection]] =
-      try {
-        files.map { p =>
-          pool.submit(new java.util.concurrent.Callable[Seq[FileSection]] {
-            override def call(): Seq[FileSection] = {
-              val ck = p + "\u0001" + element
-              val hit = headerCache.get(ck)
-              if (hit != null) hit
-              else {
-                try {
-                  val r = readSections(p, options, conf)
-                  if (headerCache.size() < PointCloudProvider.HeaderCacheMaxEntries)
-                    headerCache.put(ck, r)
-                  r
-                } catch {
-                  case e: Exception =>
-                    logWarning(s"Skipping unreadable ${kind.name} file $p: ${e.getMessage}")
-                    Nil
-                }
-              }
-            }
+      files.map { p =>
+        PointCloudProvider.headerPool.submit(
+          new java.util.concurrent.Callable[Seq[FileSection]] {
+            override def call(): Seq[FileSection] = sectionsOf(p)
           })
-        }.map(_.get())
-      } finally pool.shutdown()
+      }.map(_.get())
     val secs = mutable.ArrayBuffer.empty[SectionWithFid]
     perFile.zipWithIndex.foreach { case (sections, fid) =>
       secs ++= sections.map(fs => SectionWithFid(fs.section, fid, fs.lasStats, fs.laz))

@@ -64,33 +64,50 @@ private[las] final class BitModel {
 /** Adaptive n-symbol model (FastAC Adaptive_Data_Model). The decoder
   * lookup table is built for models above 16 symbols; the count and
   * distribution updates are identical on both sides, so encoder and
-  * decoder model state stays in lockstep symbol for symbol. */
-private[las] final class SymbolModel(val symbols: Int) {
+  * decoder model state stays in lockstep symbol for symbol.
+  *
+  * The fresh state depends on the symbol count alone, so it is computed
+  * once per count (the published reset: unit counts, one update) into a
+  * shared template that is never mutated; construction and [[reset]]
+  * copy it. Codecs reset every model at every chunk boundary, and a COPC
+  * chunk holds a few hundred points, so recomputing the distribution and
+  * decoder table there would cost as much as decoding the chunk. */
+private[las] final class SymbolModel private (val symbols: Int, template: SymbolModel) {
+  def this(symbols: Int) = this(symbols, SymbolModel.template(symbols))
+
   require(symbols >= 2, s"symbol model needs >= 2 symbols, got $symbols")
-  val counts = new Array[Long](symbols)
-  val distribution = new Array[Long](symbols)
+  val counts = new Array[Int](symbols)
+  val distribution = new Array[Int](symbols)
   val lastSymbol: Int = symbols - 1
-  var tableShift = 0
-  val decoderTable: Array[Int] =
+  private val tableBits: Int =
     if (symbols > 16) {
-      var tableBits = 3
-      while (symbols > (1 << (tableBits + 2))) tableBits += 1
-      tableShift = Entropy.DmLengthShift - tableBits
-      new Array[Int]((1 << tableBits) + 2)
-    } else null
+      var b = 3
+      while (symbols > (1 << (b + 2))) b += 1
+      b
+    } else 0
+  val tableShift: Int = if (symbols > 16) Entropy.DmLengthShift - tableBits else 0
+  val decoderTable: Array[Int] =
+    if (symbols > 16) new Array[Int]((1 << tableBits) + 2) else null
   var totalCount = 0L
   var updateCycle = 0
   var symbolsUntilUpdate = 0
-  reset()
-
-  def reset(): Unit = {
-    var i = 0
-    while (i < symbols) { counts(i) = 1; i += 1 }
-    totalCount = 0
+  if (template == null) {
+    // this instance IS the template: the published reset, run once
+    java.util.Arrays.fill(counts, 1)
     updateCycle = symbols
     update()
     updateCycle = (symbols + 6) >> 1
     symbolsUntilUpdate = updateCycle
+  } else reset()
+
+  def reset(): Unit = {
+    System.arraycopy(template.counts, 0, counts, 0, symbols)
+    System.arraycopy(template.distribution, 0, distribution, 0, symbols)
+    if (decoderTable != null)
+      System.arraycopy(template.decoderTable, 0, decoderTable, 0, decoderTable.length)
+    totalCount = template.totalCount
+    updateCycle = template.updateCycle
+    symbolsUntilUpdate = template.symbolsUntilUpdate
   }
 
   def update(): Unit = {
@@ -109,16 +126,16 @@ private[las] final class SymbolModel(val symbols: Int) {
     var k = 0
     if (decoderTable == null) {
       while (k < symbols) {
-        distribution(k) = (scale * sum) >> (31 - Entropy.DmLengthShift)
+        distribution(k) = ((scale * sum) >> (31 - Entropy.DmLengthShift)).toInt
         sum += counts(k)
         k += 1
       }
     } else {
       var s = 0
       while (k < symbols) {
-        distribution(k) = (scale * sum) >> (31 - Entropy.DmLengthShift)
+        distribution(k) = ((scale * sum) >> (31 - Entropy.DmLengthShift)).toInt
         sum += counts(k)
-        val w = (distribution(k) >> tableShift).toInt
+        val w = distribution(k) >> tableShift
         while (s < w) { s += 1; decoderTable(s) = k - 1 }
         k += 1
       }
@@ -129,6 +146,15 @@ private[las] final class SymbolModel(val symbols: Int) {
     updateCycle = math.min((5 * updateCycle) >> 2, (symbols + 6) << 3)
     symbolsUntilUpdate = updateCycle
   }
+}
+
+private[las] object SymbolModel {
+  private val templates =
+    new java.util.concurrent.ConcurrentHashMap[Integer, SymbolModel]()
+
+  /** The shared fresh state for `symbols` symbols; only ever read. */
+  private def template(symbols: Int): SymbolModel =
+    templates.computeIfAbsent(symbols, (s: Integer) => new SymbolModel(s, null))
 }
 
 /** Range encoder over a growable in-memory buffer (a LAZ chunk is encoded
@@ -284,41 +310,59 @@ private[las] final class ArithmeticDecoder(bytes: Array[Byte], startPos: Int, en
     sym
   }
 
+  /** Kept small enough for the JIT to inline at every call site; the
+    * interval search lives in the two helpers below. */
   def decodeSymbol(m: SymbolModel): Int = {
-    var sym = 0
-    var x = 0L
-    var y = length
-    if (m.decoderTable != null) {
-      length >>>= DmLengthShift
-      val dv = value / length
-      // clamp protects the table walk from a corrupt (or zero-padded
-      // overread) stream where value momentarily exceeds the interval
-      val t = math.min((dv >> m.tableShift).toInt, m.decoderTable.length - 2)
-      sym = m.decoderTable(t)
-      var n = m.decoderTable(t + 1) + 1
-      while (n > sym + 1) {
-        val k = (sym + n) >>> 1
-        if (m.distribution(k) > dv) n = k else sym = k
-      }
-      x = m.distribution(sym) * length
-      if (sym != m.lastSymbol) y = m.distribution(sym + 1) * length
-    } else {
-      length >>>= DmLengthShift
-      var n = m.symbols
-      var k = n >>> 1
-      while (k != sym) {
-        val z = m.distribution(k) * length
-        if (z > value) { n = k; y = z } else { sym = k; x = z }
-        k = (sym + n) >>> 1
-      }
-    }
-    value -= x
-    length = y - x
-    if (length < MinLength) renorm()
+    val sym = if (m.decoderTable != null) decodeByTable(m) else decodeBySearch(m)
     m.counts(sym) += 1
     m.symbolsUntilUpdate -= 1
     if (m.symbolsUntilUpdate == 0) m.update()
     sym
+  }
+
+  /** Models above 16 symbols: the decoder table brackets the symbol,
+    * a bisection over the distribution settles it. */
+  private def decodeByTable(m: SymbolModel): Int = {
+    val y0 = length
+    length >>>= DmLengthShift
+    val dv = value / length
+    // clamp protects the table walk from a corrupt (or zero-padded
+    // overread) stream where value momentarily exceeds the interval
+    val t = math.min((dv >> m.tableShift).toInt, m.decoderTable.length - 2)
+    var sym = m.decoderTable(t)
+    var n = m.decoderTable(t + 1) + 1
+    while (n > sym + 1) {
+      val k = (sym + n) >>> 1
+      if (m.distribution(k) > dv) n = k else sym = k
+    }
+    val x = m.distribution(sym) * length
+    val y = if (sym != m.lastSymbol) m.distribution(sym + 1) * length else y0
+    narrow(x, y)
+    sym
+  }
+
+  /** Models of at most 16 symbols: bisection over the scaled interval. */
+  private def decodeBySearch(m: SymbolModel): Int = {
+    var sym = 0
+    var x = 0L
+    var y = length
+    length >>>= DmLengthShift
+    var n = m.symbols
+    var k = n >>> 1
+    while (k != sym) {
+      val z = m.distribution(k) * length
+      if (z > value) { n = k; y = z } else { sym = k; x = z }
+      k = (sym + n) >>> 1
+    }
+    narrow(x, y)
+    sym
+  }
+
+  /** Shrink the coder interval to the decoded symbol's [x, y). */
+  private def narrow(x: Long, y: Long): Unit = {
+    value -= x
+    length = y - x
+    if (length < MinLength) renorm()
   }
 
   def readBits(bits: Int): Long = {

@@ -274,7 +274,12 @@ private[las] object LazFile {
     var i = 1
     while (i < count) {
       var p = off + i * stride
-      codecs.foreach { c => c.write(enc, records, p); p += c.size }
+      var ci = 0
+      while (ci < codecs.length) {
+        codecs(ci).write(enc, records, p)
+        p += codecs(ci).size
+        ci += 1
+      }
       i += 1
     }
     enc.done()
@@ -301,7 +306,12 @@ private[las] object LazFile {
     var i = 1
     while (i < count) {
       var p = off + i * stride
-      codecs.foreach { c => c.write(records, p, ctx); p += c.size }
+      var ci = 0
+      while (ci < codecs.length) {
+        codecs(ci).write(records, p, ctx)
+        p += codecs(ci).size
+        ci += 1
+      }
       i += 1
     }
     val layers = codecs.flatMap(_.finishLayers())
@@ -364,7 +374,12 @@ private[las] object LazFile {
     var i = 1
     while (i < count) {
       var p = i * stride
-      codecs.foreach { c => c.read(out, p, ctx); p += c.size }
+      var ci = 0
+      while (ci < codecs.length) {
+        codecs(ci).read(out, p, ctx)
+        p += codecs(ci).size
+        ci += 1
+      }
       i += 1
     }
     out
@@ -386,7 +401,12 @@ private[las] object LazFile {
     var i = 1
     while (i < count) {
       var p = i * stride
-      codecs.foreach { c => c.read(dec, out, p); p += c.size }
+      var ci = 0
+      while (ci < codecs.length) {
+        codecs(ci).read(dec, out, p)
+        p += codecs(ci).size
+        ci += 1
+      }
       i += 1
     }
     out

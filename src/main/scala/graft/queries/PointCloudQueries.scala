@@ -983,8 +983,8 @@ object PointCloudQueries {
     * no rewrite of earlier files), and a `time BETWEEN`-shaped read
     * must skip the three out-of-range files at the header tier (the
     * planner consults Info.gpsMin/gpsMax before any split is cut —
-    * CopcSpec pins the partition-count drop) while the residual record
-    * predicate keeps the census exact. The oracle re-derives the same
+    * CopcSpec pins the partition-count drop) while the reader-side
+    * record predicate keeps the census exact. The oracle re-derives the same
     * time window from the source arithmetic, so one record leaking
     * from (or dropped with) a skipped file scrambles a group. */
   private val pc31: Q = (s, d) => {
@@ -1383,7 +1383,7 @@ object PointCloudQueries {
         |GROUP BY src ORDER BY src""".stripMargin,
     // the same bbox re-derived from the source arithmetic: a hash match
     // proves the octree pruning dropped ONLY out-of-box chunks and the
-    // residual record filter kept the census exact
+    // reader-side record filter kept the census exact
     // pc35 reads the SAME census through a PAGED hierarchy (page-graph
     // resolution precedes chunk pruning) — one text, two layouts
     "pc35_copc_paged_hierarchy" -> prunedBoxCensusOracle,

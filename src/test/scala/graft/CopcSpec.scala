@@ -112,9 +112,9 @@ class CopcSpec extends SparkTestBase {
     parts.foreach(p => assert(p.startRecord == baseByOffset(p.chunkOffsets.head)))
     // end to end: the pruned read returns exactly the filtered rows, pid
     // included — and with chunk-sized partitions the PLANNED partition
-    // count proves the pruning actually fired through spark.read (record
-    // filters stay residual for LAZ, so the planner must be using the
-    // skip-filter set)
+    // count proves the pruning actually fired through spark.read (chunk
+    // pruning reads the skip-filter set, which holds every pushed
+    // conjunct, claimed or not)
     val all = spark.read.las(copcDir).collect()
       .filter(r => { val x = r.getAs[Int]("x"); x >= 20000 && x <= 40000 })
       .map(_.toSeq.toString).sorted.toSeq
@@ -189,6 +189,33 @@ class CopcSpec extends SparkTestBase {
     assert(got.count() == want.count())
     assert(got.agg(sum($"x".cast("bigint")), sum($"z".cast("bigint"))).head() ==
       want.agg(sum($"x".cast("bigint")), sum($"z".cast("bigint"))).head())
+  }
+
+  test("repeated bbox censuses with new literals reuse compiled code") {
+    // the claimed box filter leaves no literal in the generated code, so
+    // a second census of the same shape compiles no new classes
+    val dir = tmpDir("copc-codegen")
+    fmt6Points(32000).repartition(4)
+      .writeCopc(dir, Map("scale" -> "0.01", "copc.files" -> "4",
+        "copc.nodepoints" -> "2048"))
+    def census(df: org.apache.spark.sql.DataFrame) =
+      df.agg(count(lit(1)), sum($"x".cast("long")), sum($"y".cast("long")),
+        min($"time"), max($"time"))
+    def box(x0: Int, x1: Int, y0: Int, y1: Int) =
+      census(spark.read.las(dir)
+        .where($"x".between(x0, x1) && $"y".between(y0, y1))).head().toSeq
+    def want(x0: Int, x1: Int, y0: Int, y1: Int) =
+      census(fmt6Points(32000)
+        .where($"x".between(x0, x1) && $"y".between(y0, y1))).head().toSeq
+    assert(box(10000, 25000, 100, 600) == want(10000, 25000, 100, 600))
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val second = box(52000, 61000, 250, 800)
+    assert(org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount == compiles,
+      "a same-shape census with new literals compiled new classes")
+    assert(second == want(52000, 61000, 250, 800))
+    assert(second.head.asInstanceOf[Long] > 0)
   }
 
   test("a bbox-subscribed stream over a COPC dir emits exactly the box (pruned)") {

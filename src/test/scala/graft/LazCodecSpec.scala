@@ -358,4 +358,32 @@ class LazCodecSpec extends AnyFunSuite {
     val vlr = LazFile.LazVlr(LazFile.CompressorChunked, 0, -1, LazFile.itemsFor(0))
     assert(LazFile.parseVlrPayload(LazFile.vlrPayload(vlr)).chunkSize == -1)
   }
+
+  test("symbol model reset restores the shared fresh state field for field") {
+    // every symbol count the item codecs and integer compressors build,
+    // plus neighbours around the decoder-table threshold (16 / 17)
+    val sizes = Seq(2, 3, 4, 6, 8, 9, 13, 15, 16, 17, 18, 32, 33, 64, 128, 256, 516)
+    def state(m: SymbolModel): Seq[Any] = Seq(m.symbols, m.lastSymbol, m.tableShift,
+      m.counts.toSeq, m.distribution.toSeq, Option(m.decoderTable).map(_.toSeq),
+      m.totalCount, m.updateCycle, m.symbolsUntilUpdate)
+    val rnd = new scala.util.Random(7)
+    sizes.foreach { n =>
+      val fresh = new SymbolModel(n)
+      // the published reset: unit counts, one update at cycle n
+      assert(fresh.counts.forall(_ == 1) && fresh.totalCount == n, s"n=$n")
+      assert(fresh.updateCycle == ((n + 6) >> 1) && fresh.symbolsUntilUpdate == fresh.updateCycle)
+      val m = new SymbolModel(n)
+      val enc = new ArithmeticEncoder
+      // skewed symbols drive count growth past the halving threshold
+      (0 until 40000).foreach { _ =>
+        enc.encodeSymbol(m, if (rnd.nextInt(4) == 0) rnd.nextInt(n) else n / 3)
+      }
+      m.update()
+      assert(state(m) != state(fresh), s"n=$n: the updates must move the model")
+      m.reset()
+      assert(state(m) == state(new SymbolModel(n)), s"n=$n")
+      // resetting one model leaves every other model's arrays alone
+      assert(state(fresh) == state(new SymbolModel(n)), s"n=$n")
+    }
+  }
 }

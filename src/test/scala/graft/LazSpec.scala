@@ -184,21 +184,54 @@ class LazSpec extends SparkTestBase {
     assert(bb.getInt(tableOffset.toInt + 4) == 3, "chunk count for 5000 points @ 2000")
   }
 
-  test("LAZ scans keep header-aggregate and limit pushdown; record filters stay residual") {
+  test("LAZ scans claim record filters: no residual Filter, answers equal the raw twin") {
+    val pts = fmt0Points(10000)
+    val lasDir = tmpDir("laz-push-raw")
     val lazDir = tmpDir("laz-push")
-    fmt0Points(10000).writeLaz(lazDir, Map("laz.chunkSize" -> "1024"))
+    pts.writeLas(lasDir)
+    pts.writeLaz(lazDir, Map("laz.chunkSize" -> "1024"))
     val laz = spark.read.las(lazDir)
-    // COUNT answered from headers (no data IO): plan is the header-agg scan
+    val raw = spark.read.las(lasDir)
+    // unfiltered: COUNT answered from headers (no data IO), LIMIT pushed
     val cnt = laz.groupBy().count()
     assert(cnt.queryExecution.executedPlan.toString.contains("header-aggregate"),
       cnt.queryExecution.executedPlan.toString)
     assert(cnt.head().getLong(0) == 10000)
-    // pushed limit truncates chunk partitions instead of scanning all
-    assert(laz.limit(700).count() == 700)
-    // a predicate still answers correctly (residual evaluation)
-    val filtered = laz.filter($"x" > 100000).count()
-    val expected = fmt0Points(10000).filter($"x" > 100000).count()
-    assert(filtered == expected)
+    val lim = laz.limit(700)
+    assert(lim.queryExecution.executedPlan.toString.contains("PushedLimit: 700"),
+      lim.queryExecution.executedPlan.toString)
+    assert(lim.count() == 700)
+
+    // filtered: the pushable predicate is claimed — no Filter above the
+    // scan, the scan lists it, and the reader evaluates it per record
+    val pred = $"x" > 100000 && $"intensity" <= 3000
+    val filtered = laz.filter(pred).select("x", "y", "intensity")
+    val plan = filtered.queryExecution.executedPlan
+    assert(plan.collect { case f: org.apache.spark.sql.execution.FilterExec => f }.isEmpty,
+      plan.toString)
+    assert(plan.toString.contains("PushedFilters: [") &&
+      plan.toString.contains("GreaterThan(x,100000)") &&
+      plan.toString.contains("LessThanOrEqual(intensity,3000)"), plan.toString)
+    val expected = raw.filter(pred).select("x", "y", "intensity")
+      .orderBy("x", "y", "intensity").collect().toSeq
+    assert(expected.nonEmpty && expected.size < 10000)
+    assert(filtered.orderBy("x", "y", "intensity").collect().toSeq == expected)
+
+    // a filtered COUNT is not answered from headers
+    val fcnt = laz.filter(pred).groupBy().count()
+    assert(!fcnt.queryExecution.executedPlan.toString.contains("header-aggregate"),
+      fcnt.queryExecution.executedPlan.toString)
+    assert(fcnt.head().getLong(0) == expected.size)
+
+    // LIMIT is not pushed under a filter (per-file match counts are
+    // unknown), and the limited answer still comes from matching rows
+    val flim = laz.filter(pred).limit(50)
+    assert(!flim.queryExecution.executedPlan.toString.contains("PushedLimit"),
+      flim.queryExecution.executedPlan.toString)
+    val limited = flim.select("x", "intensity").collect()
+    assert(limited.length == 50)
+    assert(limited.forall(r =>
+      r.getInt(0) > 100000 && r.getAs[Number](1).intValue <= 3000))
   }
 
   test("LAZ scan is vectorized and synthesizes pid identically to the raw path") {

@@ -621,6 +621,39 @@ class PointCloudSpec extends SparkTestBase {
     assert(coldMs < 60000)
   }
 
+  test("repeated resolves share one header-read pool: no thread starts, fid order kept") {
+    val lake = tmpDir("resolve-pool")
+    // eight single-file writes, file k holding k + 1 points with x == k
+    (0 until 8).foreach { k =>
+      val part = tmpDir(s"resolve-pool-$k")
+      spark.range(k + 1).select(
+        lit(k).cast("int").as("x"), lit(0).cast("int").as("y"),
+        lit(0).cast("int").as("z"))
+        .coalesce(1).writeLas(part)
+      val f = new java.io.File(part).listFiles().filter(_.getName.endsWith(".las")).head
+      java.nio.file.Files.move(f.toPath, java.nio.file.Paths.get(lake, f"f$k%02d.las"))
+    }
+    import scala.jdk.CollectionConverters._
+    def poolThreads: Set[Long] = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-header-read-")).map(_.getId).toSet
+    spark.read.las(lake) // warm: the shared pool exists from here on
+    val before = poolThreads
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    val started0 = mx.getTotalStartedThreadCount
+    (0 until 10).foreach(_ => spark.read.las(lake))
+    // one thread per file per resolve would be 80 here
+    val started = mx.getTotalStartedThreadCount - started0
+    assert(started < 10, s"$started threads started by 10 resolves")
+    assert(poolThreads == before)
+    assert(before.nonEmpty && before.size <=
+      graft.pointcloud.connector.PointCloudProvider.HeaderReadParallelism)
+    // fid = listing position, whichever pool thread read the header
+    val back = spark.read.las(lake)
+    val perFid = back.groupBy("fid").agg(min("x"), max("x"), count(lit(1)))
+      .as[(Int, Int, Int, Long)].collect().sortBy(_._1).toSeq
+    assert(perFid == (0 until 8).map(k => (k, k, k, (k + 1).toLong)))
+  }
+
   test("unreadable files are skipped with a warning, valid ones read") {
     val dir = tmpDir("badfile")
     samplePoints.coalesce(1).writeLas(dir)
