@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints a JSON line {"metric":...,"queries":{name:sec,...}}, also
@@ -162,19 +161,9 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.envCores
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // fork-free local FS (chmod/readlink shell-outs dominate the
-      // micro-batch and task-commit floor without the native lib)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.NoForkLocalFs].getName)
-      .getOrCreate()
+    val spark = LocalSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // optional comma-separated name-prefix filter, for iterating on one
     // query family locally; the driver never sets it (full run). A set-
@@ -609,15 +598,8 @@ object Bench {
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND)
     catch { case _: Exception => }
-    // teardown BEFORE the structured line goes out: the state-store
-    // maintenance tick otherwise races session shutdown and stack-traces
-    // onto stderr after our output, pushing the JSON line out of a
-    // bounded log tail (r03's driver saw exactly that). Guarded so a
-    // teardown failure can never eat the result line.
-    try org.apache.spark.sql.graftglue.Bridge.stopStateStores()
-    catch { case _: Throwable => }
-    try spark.stop()
-    catch { case _: Throwable => }
+    // teardown BEFORE the structured line goes out (see LocalSession.stop)
+    LocalSession.stop(spark)
     // The driver captures only a bounded TAIL of stdout and parses the
     // JSON line out of it; the verbose line above grew past that window
     // (BENCH_r17/r18: parsed=null — the driver saw only the back half of

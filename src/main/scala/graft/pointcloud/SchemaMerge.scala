@@ -23,6 +23,27 @@ object PointCloudTypes {
 
   val supported: Set[DataType] =
     Set(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
+
+  /** Integer tags for the supported primitives, ordered so that
+    * `tag <= Long` means integral and a larger tag is a wider type within
+    * each family; per-record loops switch on these instead of DataTypes. */
+  object Tag {
+    final val Byte = 0; final val Short = 1; final val Int = 2; final val Long = 3
+    final val Float = 4; final val Double = 5
+    def unsignedMask(tag: Int): Long = tag match {
+      case Byte => 0xffL; case Short => 0xffffL; case Int => 0xffffffffL
+      case _ => -1L
+    }
+    def of(dt: DataType): Int = dt match {
+      case ByteType => Byte
+      case ShortType => Short
+      case IntegerType => Int
+      case LongType => Long
+      case FloatType => Float
+      case DoubleType => Double
+      case other => throw new IllegalArgumentException(s"unsupported $other")
+    }
+  }
 }
 
 /** Multi-file schema merge with numeric widening.

@@ -1,10 +1,8 @@
 package graft.pointcloud.connector
 
 import java.io.{BufferedReader, InputStreamReader}
-import java.nio.ByteBuffer
 
-import graft.pointcloud.{RecordDecoder, Section}
-import org.apache.hadoop.conf.Configuration
+import graft.pointcloud.Section
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecificInternalRow}
@@ -819,14 +817,30 @@ class PointCloudReaderFactory(
     pushedFilters: Array[SourceFilter] = Array.empty)
   extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val readSchema = DataType.fromJson(readSchemaJson).asInstanceOf[StructType]
+  /** The DSv2 row contract. Binary and LAZ partitions always read
+    * columnar ([[supportColumnarReads]]), so for them this only walks the
+    * columnar reader's batches row by row: there is one decode path, and
+    * XYZ text is the one row-native format. */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case p: BinaryPartition => new BinarySectionReader(p, readSchema, predicate(p))
-      case p: LazPartition => new LazSectionReader(p, readSchema, lazPredicate(p))
-      case p: XyzPartition => new XyzReader(p, readSchema)
+      case p: XyzPartition =>
+        new XyzReader(p, DataType.fromJson(readSchemaJson).asInstanceOf[StructType])
+      case p => new PartitionReader[InternalRow] {
+        private val batches = createColumnarReader(p)
+        private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+        private var row: InternalRow = _
+        override def next(): Boolean = {
+          while (!rows.hasNext) {
+            if (!batches.next()) return false
+            rows = batches.get().rowIterator()
+          }
+          row = rows.next()
+          true
+        }
+        override def get(): InternalRow = row
+        override def close(): Unit = batches.close()
+      }
     }
-  }
 
   /** Fixed-stride binary sections decode vectorized (ColumnarBatch) —
     * raw and LAZ alike (a decoded chunk IS a run of fixed-stride
@@ -838,145 +852,28 @@ class PointCloudReaderFactory(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val readSchema = DataType.fromJson(readSchemaJson).asInstanceOf[StructType]
     partition match {
-      case p: BinaryPartition => new BinarySectionColumnarReader(p, readSchema, predicate(p))
-      case p: LazPartition => new LazSectionColumnarReader(p, readSchema, lazPredicate(p))
+      case p: BinaryPartition =>
+        new BinarySectionColumnarReader(p, readSchema, predicate(p.sectionSchemaJson, p.fid))
+      case p: LazPartition =>
+        new LazSectionColumnarReader(p, readSchema, predicate(p.sectionSchemaJson, p.fid))
     }
   }
 
-  /** Pushed-filter evaluator compiled against this partition's section
-    * schema (sections differ across merged files); null when nothing was
-    * pushed. */
-  private def predicate(p: BinaryPartition): RecordPredicate =
+  /** Pushed-filter evaluator compiled against one partition's section
+    * schema (sections differ across merged files; a LAZ partition's
+    * records are its DECODED fixed-stride LAS records), or null when
+    * nothing was pushed. The batch builder and the streaming source claim
+    * pushable filters for raw and compressed sections alike, so the
+    * readers must honor them or claimed-pushed rows leak unfiltered. Only
+    * the field geometry matters: the record buffer carries the byte
+    * order. */
+  private def predicate(sectionSchemaJson: String, fid: Int): RecordPredicate =
     if (pushedFilters.isEmpty) null
     else new RecordPredicate(pushedFilters,
       DataType.fromJson(tableSchemaJson).asInstanceOf[StructType],
-      Section(p.location, p.sectionOffset, p.numRecords, p.littleEndian,
-        DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType], p.stride),
-      p.fid)
-
-  /** Same, over a LAZ partition's DECODED records (a decoded chunk is a
-    * run of ordinary fixed-stride LAS records). Both the batch builder
-    * and the streaming source claim pushable filters for compressed
-    * sections — the readers must honor them or claimed-pushed rows leak
-    * unfiltered. */
-  private def lazPredicate(p: LazPartition): RecordPredicate =
-    if (pushedFilters.isEmpty) null
-    else new RecordPredicate(pushedFilters,
-      DataType.fromJson(tableSchemaJson).asInstanceOf[StructType],
-      Section(p.location, 0, p.numRecords, littleEndian = true,
-        DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType], p.stride),
-      p.fid)
-}
-
-/** Streams one partition's records through a reused chunk buffer and
-  * decodes them into a reused row — no per-record allocation. Pushed
-  * filters are evaluated on the raw record bytes; non-matching records
-  * are skipped before any decode. */
-class BinarySectionReader(p: BinaryPartition, readSchema: StructType,
-    predicate: RecordPredicate = null)
-  extends PartitionReader[InternalRow] {
-
-  private val sectionSchema = DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType]
-  private val section = Section(p.location, p.sectionOffset, p.numRecords,
-    p.littleEndian, sectionSchema, p.stride)
-  private val decoder = new RecordDecoder(section, readSchema, p.fid)
-
-  private val path = new Path(p.location)
-  private val in = path.getFileSystem(LocalIo.conf).open(path)
-  in.seek(p.sectionOffset + p.startRecord * p.stride)
-
-  // chunked reads: ~4 MiB of whole records at a time
-  private val recordsPerChunk: Int =
-    math.max(1, math.min(p.numRecords, (4 << 20) / math.max(1, p.stride)).toInt)
-  private val chunk = new Array[Byte](recordsPerChunk * p.stride)
-  private val buf = ByteBuffer.wrap(chunk).order(section.order)
-
-  private var nextIdx = 0L          // next record index within this partition
-  private var chunkStart = 0L       // partition-record index of chunk[0]
-  private var chunkLen = 0          // records currently in chunk
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (true) {
-      if (nextIdx >= p.numRecords) return false
-      if (nextIdx - chunkStart >= chunkLen) {
-        val n = math.min(recordsPerChunk.toLong, p.numRecords - nextIdx).toInt
-        in.readFully(chunk, 0, n * p.stride)
-        chunkStart = nextIdx
-        chunkLen = n
-      }
-      val base = ((nextIdx - chunkStart) * p.stride).toInt
-      val pid = p.startRecord + nextIdx
-      nextIdx += 1
-      if (predicate == null || predicate.matches(buf, base, pid)) {
-        current = decoder.decode(buf, base, pid)
-        return true
-      }
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = in.close()
-}
-
-/** Decodes a run of LAZ chunks: each chunk's compressed bytes are read
-  * whole (they are the IO unit the chunk table bounds), entropy-decoded
-  * into raw LAS record bytes, and handed to the SAME RecordDecoder the
-  * uncompressed reader uses — schema casts, fid/pid synthesis and column
-  * pruning are shared, so a .laz scan differs from .las only in the
-  * decode step. Sequential within a chunk by construction (prediction
-  * state chains point to point); parallel ACROSS chunks/partitions. */
-class LazSectionReader(p: LazPartition, readSchema: StructType,
-    predicate: RecordPredicate = null)
-  extends PartitionReader[InternalRow] {
-
-  private val sectionSchema = DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType]
-  private val section = Section(p.location, 0, p.numRecords,
-    littleEndian = true, sectionSchema, p.stride)
-  private val decoder = new RecordDecoder(section, readSchema, p.fid)
-  private val chunkDecoder = new graft.pointcloud.las.laz.LazChunkDecoder(p.format, p.stride)
-
-  private val path = new Path(p.location)
-  private val in = path.getFileSystem(LocalIo.conf).open(path)
-
-  private var chunkIdx = -1
-  private var buf: ByteBuffer = _
-  private var idxInChunk = 0
-  private var countInChunk = 0
-  private var pid = p.startRecord - 1
-  private var curBase = 0
-
-  override def next(): Boolean = {
-    while (true) {
-      while (idxInChunk >= countInChunk) {
-        chunkIdx += 1
-        if (chunkIdx >= p.chunkOffsets.length) return false
-        val count = p.chunkCounts(chunkIdx)
-        if (count > 0) {
-          val compressed = new Array[Byte](p.chunkBytes(chunkIdx).toInt)
-          in.seek(p.chunkOffsets(chunkIdx))
-          in.readFully(compressed)
-          val records = chunkDecoder.decode(compressed, count.toInt)
-          buf = ByteBuffer.wrap(records).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          idxInChunk = 0
-          countInChunk = count.toInt
-        }
-      }
-      curBase = idxInChunk * p.stride
-      idxInChunk += 1
-      pid += 1
-      // filters claimed as pushed are honored on the DECODED record
-      // bytes (the chunk must entropy-decode either way; what pushdown
-      // saves here is row materialization, not decode work)
-      if (predicate == null || predicate.matches(buf, curBase, pid)) return true
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = decoder.decode(buf, curBase, pid)
-
-  override def close(): Unit = in.close()
+      Section("", 0, 0, littleEndian = true,
+        DataType.fromJson(sectionSchemaJson).asInstanceOf[StructType]),
+      fid)
 }
 
 /** Tab-separated text reader: types parsed per the schema, missing

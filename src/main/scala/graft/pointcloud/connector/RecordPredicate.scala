@@ -2,7 +2,7 @@ package graft.pointcloud.connector
 
 import java.nio.ByteBuffer
 
-import graft.pointcloud.FieldDecoder.Tag
+import graft.pointcloud.PointCloudTypes.Tag
 import graft.pointcloud.Section
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._

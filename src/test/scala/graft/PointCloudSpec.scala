@@ -233,22 +233,40 @@ class PointCloudSpec extends SparkTestBase {
   }
 
   test("row-based reader applies pushed filters (non-columnar path)") {
-    // Spark picks the columnar reader for binary scans, so drive the
-    // row-based PartitionReader directly through the factory contract
-    val dir = tmpDir("rowpred")
-    samplePoints.coalesce(1).writeLas(dir)
-    val df = spark.read.las(dir).filter($"x" > 900)
-    val scan = df.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.head.scan.asInstanceOf[graft.pointcloud.connector.PointCloudScan]
-    val factory = scan.createReaderFactory()
-    var n = 0
-    scan.planInputPartitions().foreach { p =>
-      val r = factory.createReader(p)
-      try while (r.next()) n += 1
-      finally r.close()
+    // Spark picks the columnar reader for binary and LAZ scans, so drive
+    // the row-based PartitionReader directly through the factory contract
+    // and compare its rows with the columnar scan of the same query
+    val cols = Seq("x", "y", "intensity", "fid", "pid")
+    def factoryRows(df: org.apache.spark.sql.DataFrame) = {
+      val scan = df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.head.scan.asInstanceOf[graft.pointcloud.connector.PointCloudScan]
+      val Seq(xi, yi, ii, fi, pi) = cols.map(scan.readSchema().fieldIndex)
+      val factory = scan.createReaderFactory()
+      val out = Seq.newBuilder[(Int, Int, Short, Int, Long)]
+      scan.planInputPartitions().foreach { p =>
+        val r = factory.createReader(p)
+        try while (r.next()) {
+          val row = r.get()
+          out += ((row.getInt(xi), row.getInt(yi), row.getShort(ii), row.getInt(fi), row.getLong(pi)))
+        } finally r.close()
+      }
+      out.result().sorted
     }
-    assert(n == samplePoints.filter($"x" > 900).count())
+    val lasDir = tmpDir("rowpred")
+    samplePoints.coalesce(1).writeLas(lasDir)
+    val lazDir = tmpDir("rowpred-laz")
+    samplePoints.coalesce(1).writeLaz(lazDir, Map("laz.chunkSize" -> "1000"))
+    val expected = samplePoints.filter($"x" > 900).count()
+    assert(expected > 0)
+    for (dir <- Seq(lasDir, lazDir)) {
+      val df = spark.read.las(dir).filter($"x" > 900).select(cols.map(col): _*)
+      val rows = factoryRows(df)
+      assert(rows.length == expected, dir)
+      val scanned = df.collect().map(r =>
+        (r.getInt(0), r.getInt(1), r.getShort(2), r.getInt(3), r.getLong(4))).toSeq.sorted
+      assert(rows == scanned, dir)
+    }
   }
 
   test("splits of one section share one schema-JSON String instance") {
@@ -381,9 +399,10 @@ class PointCloudSpec extends SparkTestBase {
   }
 
   test("selected decode path produces identical rows to the sequential path") {
-    // a tautologically-true pushed filter forces fillColumnSelected for
-    // every record; any drift between the two decode loops (cast chain,
-    // zero-extend, nodata) shows up as a row mismatch
+    // a tautologically-true pushed filter sends every record through the
+    // fill loop's selected branch; any drift between the selected and
+    // unselected branches (cast chain, zero-extend, nodata) shows up as a
+    // row mismatch
     val dir = tmpDir("selpath")
     samplePoints.writeLas(dir)
     val cols = Seq("x", "y", "z", "intensity", "flags", "classification")
@@ -460,13 +479,50 @@ class PointCloudSpec extends SparkTestBase {
   }
 
   test("binary scans are vectorized (ColumnarToRow above the scan)") {
+    def columnar(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.executedPlan.toString.contains("ColumnarToRow")
     val dir = tmpDir("columnar")
     samplePoints.writeLas(dir)
     val df = spark.read.las(dir).select("x", "intensity")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"), plan)
+    assert(columnar(df), df.queryExecution.executedPlan.toString)
     assert(df.agg(sum("x")).as[Long].head() ==
       samplePoints.agg(sum("x")).as[Long].head())
+    // every binary format plans the same columnar scan, so a format that
+    // fell back to the factory's row adapter shows up here
+    val plyLe = tmpDir("columnar-ply-le")
+    samplePoints.writePly(plyLe)
+    val plyBe = tmpDir("columnar-ply-be")
+    samplePoints.writePly(plyBe, Map("bigEndian" -> "true"))
+    val copc = tmpDir("columnar-copc")
+    samplePoints.drop("angle", "flags")
+      .withColumn("return", lit(17).cast("byte"))
+      .withColumn("flags", lit(0).cast("byte"))
+      .withColumn("angle", lit(0).cast("short"))
+      .withColumn("time", col("x").cast("double"))
+      .coalesce(1).writeCopc(copc, Map("copc.nodepoints" -> "2048"))
+    Seq("PLY little-endian" -> spark.read.ply(plyLe),
+        "PLY big-endian" -> spark.read.ply(plyBe),
+        "COPC" -> spark.read.las(copc)).foreach { case (name, in) =>
+      val sel = in.select("x", "intensity")
+      assert(columnar(sel), s"$name: ${sel.queryExecution.executedPlan}")
+      assert(sel.agg(sum("x")).as[Long].head() ==
+        samplePoints.agg(sum("x")).as[Long].head(), name)
+    }
+    // XYZ text is the one row-native format
+    val xyz = tmpDir("columnar-xyz")
+    samplePoints.writeXyz(xyz)
+    assert(!columnar(spark.read.xyz(xyz).select("x")))
+    // a micro-batch of a LAS stream plans the columnar scan too
+    val q = spark.readStream.format("las").load(dir).select("x", "intensity")
+      .writeStream.format("memory").queryName("columnar_las_stream")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+      assert(plan.contains("ColumnarToRow"), plan)
+      assert(spark.table("columnar_las_stream").count() == 10000)
+    } finally q.stop()
   }
 
   test("widenUnsigned zero-extends unsigned fields; default wraps") {

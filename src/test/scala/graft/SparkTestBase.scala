@@ -11,21 +11,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  // The extensions class is set HERE, on the first session of the JVM,
-  // because spark.sql.extensions is a static conf consumed only when the
-  // SparkContext is created — the production deployment shape. The
+  // The first session of the JVM comes from LocalSession, which sets
+  // spark.sql.extensions (a static conf consumed only when the
+  // SparkContext is created) — the production deployment shape. The
   // config-path test asserts a fresh newSession() resolves the injected
-  // functions without any registerAll call.
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.hadoop.fs.file.impl",
-      classOf[graft.hadoop.NoForkLocalFileSystem].getName)
-    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-      classOf[graft.hadoop.NoForkLocalFs].getName)
-    .getOrCreate()
+  // functions without any registerAll call. Four cores whatever
+  // SPARK_GRAFT_CPUS says, so specs see the same partitioning everywhere.
+  lazy val session: SparkSession = LocalSession(cores = "4")
 }
